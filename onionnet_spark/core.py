@@ -9,11 +9,16 @@ Python dicts is either unnecessary (keys are self-describing) or a
 first-class DataFrame (dictionary tables, see
 ``onionnet_spark/functions/encoding.py``).
 
-We deliberately do NOT hash the composite key into a 64-bit int: at
-10^10+ nodes a 64-bit hash has non-trivial birthday collision
-probability, and Tungsten shuffles composite (string, string) keys
-efficiently. The layer column has tiny cardinality so it compresses
-to a dictionary page in parquet and broadcasts for free.
+The node key stored in every frame is the composite (layer, node_id)
+string pair: Tungsten shuffles it efficiently, and the layer column
+has tiny cardinality, so it compresses to a dictionary page in
+parquet and broadcasts for free. BFS interiors may additionally run
+on an xxhash64(layer, node_id) long (``cached_int_sym``,
+``cached_int_endpoints``, built on ``_int_nodes``): at 10^10+ nodes a
+64-bit hash has non-trivial birthday collision probability, so the
+node index is checked for clashes once per graph instance, and on a
+clash the int views are None and callers run on the exact string
+key. Results always leave an operator keyed by the strings.
 """
 
 from __future__ import annotations
@@ -246,8 +251,9 @@ class OnionGraph:
                     # hash safely because of the OnionGraph builder
                     # invariant that every edge endpoint appears in
                     # graph.nodes (the same referential-integrity
-                    # precondition _bfs_int documents). A graph with
-                    # dangling endpoints must not use the int views.
+                    # precondition traversal._lockstep_bfs documents).
+                    # A graph with dangling endpoints must not use the
+                    # int views.
                     e = self.edge_endpoints().select(
                         F.xxhash64(f"{s}_layer", f"{s}_id").alias("s"),
                         F.xxhash64(f"{d}_layer", f"{d}_id").alias("d"),

@@ -1056,7 +1056,7 @@ def ann_ivf_pq_topk(
         # but are fully independent — run both Lloyd loops
         # CONCURRENTLY so their (small, serial) per-iteration jobs
         # interleave on the scheduler instead of queueing end-to-end.
-        # Same dual-thread pattern as on_shortest_path's BFS arms.
+        # Same dual-thread pattern as on_shortest_path_weighted's arms.
         with ThreadPoolExecutor(max_workers=2) as pool:
             coarse_fut = pool.submit(
                 kmeans_codebook, df, vec_col, id_col, n_centroids, iterations

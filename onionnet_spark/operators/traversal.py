@@ -8,68 +8,282 @@ Reference parity: ``onionnet/searcher.py``:
   - compute_on_shortest (searcher.py:26-117): mark vertices v with
     d_fwd(source, v) + d_rev(v, targets) in {d_fwd(source, t)}.
 
-Spark-first design: BFS is a bounded loop of joins. The frontier is
-typically orders of magnitude smaller than the edge list, so each
-expansion joins a *broadcast* frontier against the (persisted,
-column-pruned) edge endpoints — no shuffle of the big side at all
-while the frontier stays under the broadcast threshold; past it we
-fall back to a shuffled join keyed on the node key (AQE picks this
-up automatically from stats, we also hint explicitly from the known
-frontier count, which we materialize anyway for loop control).
-Visited-set lineage is truncated with localCheckpoint every few
-iterations so plans don't grow exponentially with depth.
+Spark-first design: every hop-count traversal here runs on ONE
+level-synchronous frontier kernel, `_lockstep_bfs`, in the shape of
+a Pregel superstep (Pregelix: a state-message join plus a group-by).
+Its frontier rows carry an arm id; each arm is one BFS with its own
+orientation (downstream, upstream or sym), seeds and stopping rule,
+and all live arms advance together, so a level is ONE plan for every
+arm: a join of the frontier against the graph's cached endpoint view
+for each arm's orientation (a broadcast frontier while it fits
+`BROADCAST_FRONTIER_MAX`, so the big side is scanned, never
+exchanged), a dedup on (arm, node key) fused with the anti-join
+against the arm's visited set, and a lazy checkpoint cut that the
+level's single action -- per-arm row counts plus stop-node hits --
+materializes. k-hop 'bi' runs its two arms in lockstep, on-shortest-
+path its forward and reverse arms, multi-source BFS one arm per
+source. The kernel keys nodes either by (layer, node_id) strings or
+by the collision-checked 64-bit ids of the ``cached_int_*`` views
+(core.py); each caller picks the key, and a hash clash falls back
+to strings.
 """
 
 from __future__ import annotations
+
+import json
+from collections import Counter
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onionnet_spark.core import NODE_KEY, OnionGraph
+from onionnet_spark.operators.ckpt import IterCheckpointer
 
 # Frontiers below this row count are broadcast to the edge join.
 BROADCAST_FRONTIER_MAX = 2_000_000
 
 
-def _directed_endpoints(graph: OnionGraph, direction: str) -> DataFrame:
-    """Edge endpoints oriented for the requested traversal direction,
-    persisted once per graph (core.cached_endpoints).
+class _Arm(NamedTuple):
+    """One BFS of a `_lockstep_bfs` run.
 
-    'downstream' follows src->dst (out-edges, searcher.py:217-219),
-    'upstream' follows dst->src (in-edges, searcher.py:205-211);
-    'sym' traverses the undirected (symmetrized) view — both caches
-    are persisted once per graph instance.
+    ``seeds`` is a driver-side list of (layer, node_id) tuples, or a
+    DataFrame with (layer, node_id) columns for a single-arm run
+    seeded from a computed set (which must never round-trip through
+    the driver at scale). The arm stops at ``max_dist``, when its
+    frontier is empty, once every node of ``stop_nodes`` has been
+    reached (levels are disjoint, so each stop node hits once), or
+    when the arm at index ``paired`` stops.
     """
-    if direction == "sym":
-        return graph.cached_symmetrized()
-    return graph.cached_endpoints(direction)
+
+    seeds: "list[tuple[str, str]] | DataFrame"
+    orientation: str
+    max_dist: int | None = None
+    stop_nodes: list[tuple[str, str]] | None = None
+    paired: int | None = None
 
 
-def _sources_df(spark: SparkSession, sources) -> DataFrame:
-    """Seed frame for BFS: either a driver-side list of (layer, id)
-    tuples (the ego-search shape) or a DataFrame with (layer,
-    node_id) columns — the multi-source-from-a-computed-set shape
-    (e.g. 'everything reachable from the giant SCC'), which must
-    never round-trip through the driver at scale."""
-    if isinstance(sources, DataFrame):
-        return sources.select(
-            "layer", "node_id", F.lit(0).alias("dist")
-        ).localCheckpoint()
-    return spark.createDataFrame(
-        [(l, str(i), 0) for (l, i) in sources], "layer string, node_id string, dist int"
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _rows_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side rows as a JVM-only plan: one JSON literal that the
+    optimizer folds into an inline table. ``spark.createDataFrame``
+    would build a Python RDD whose every scan starts Python workers
+    -- a cost each BFS level would pay again when it broadcasts the
+    seeds or probes the stop nodes."""
+    fields = [f.split() for f in ddl.split(",")]
+    typ = ",".join(f"{n}:{t}" for n, t in fields)
+    payload = json.dumps([dict(zip((n for n, _ in fields), r)) for r in rows])
+    return spark.sql("SELECT 1").select(
+        F.inline(F.from_json(F.lit(payload), f"array<struct<{typ}>>"))
     )
+
+
+def _lockstep_bfs(
+    graph: OnionGraph, arms: list[_Arm], int_key: bool = False
+) -> tuple[DataFrame, list[int]]:
+    """Level-synchronous BFS of all ``arms`` at once: one Spark
+    action per level, whatever the arm count.
+
+    Returns (DataFrame(arm, layer, node_id, dist), depths): the
+    union of every level including each arm's seeds at dist 0
+    (seeds absent from the graph stay, alone, at dist 0), and per
+    arm the depth of its deepest non-empty level.
+
+    ``int_key`` runs the levels on the int-keyed views, falling back
+    to the exact string keying when the 64-bit hash clashes (the
+    views are None). Seeds are always emitted from their string
+    frame; deeper levels map back through the node index once, at
+    the end -- which relies on the OnionGraph invariant that edge
+    endpoints appear in graph.nodes.
+    """
+    spark = graph.nodes.sparkSession
+    orients = {a.orientation for a in arms}
+    views = None
+    if int_key:
+        views = {
+            o: graph.cached_int_sym() if o == "sym" else graph.cached_int_endpoints(o)
+            for o in orients
+        }
+        if any(v is None for v in views.values()):
+            views = None
+    if views is not None:
+        nidx = next(iter(views.values()))[1]
+        edges_of = {o: v[0] for o, v in views.items()}
+        key, src, dst = ["node"], ["s"], ["d"]
+    else:
+        edges_of = {
+            o: graph.cached_symmetrized() if o == "sym" else graph.cached_endpoints(o)
+            for o in orients
+        }
+        key, src, dst = NODE_KEY, ["src_layer", "src_id"], ["dst_layer", "dst_id"]
+    akey = ["arm", *key]
+
+    def _to_key(df: DataFrame) -> DataFrame:
+        if views is None:
+            return df
+        rest = [c for c in df.columns if c not in NODE_KEY]
+        return df.select(F.xxhash64("layer", "node_id").alias("node"), *rest)
+
+    ck = IterCheckpointer(prefix="onionnet_bfs_")
+    stops = {
+        i: {(l, str(n)) for (l, n) in a.stop_nodes}
+        for i, a in enumerate(arms)
+        if a.stop_nodes is not None
+    }
+    stop_df = None
+    if stops:
+        stop_df = F.broadcast(
+            _to_key(
+                _rows_frame(
+                    spark,
+                    [(i, l, n, 1) for i, s in stops.items() for (l, n) in sorted(s)],
+                    "arm int, layer string, node_id string, _hit int",
+                )
+            )
+        )
+
+    def _measure(level: DataFrame, probe: bool) -> dict[int, tuple[int, int]]:
+        # the level's single action: materializes its lazy cut and
+        # returns (rows, stop-node hits) per arm
+        aggs = [F.count("*").alias("n")]
+        if probe:
+            level = level.join(stop_df, on=akey, how="left")
+            aggs.append(F.count("_hit").alias("hit"))
+        rows = level.groupBy("arm").agg(*aggs).collect()
+        return {r["arm"]: (r["n"], r["hit"] if probe else 0) for r in rows}
+
+    if isinstance(arms[0].seeds, DataFrame):
+        seeds = ck.cut(
+            arms[0].seeds.select(
+                F.lit(0).alias("arm"), "layer", "node_id", F.lit(0).alias("dist")
+            ),
+            eager=False,
+        )
+        stats = _measure(seeds, False)
+    else:
+        seed_rows = [
+            (i, l, str(n), 0) for i, a in enumerate(arms) for (l, n) in a.seeds
+        ]
+        seeds = _rows_frame(
+            spark, seed_rows, "arm int, layer string, node_id string, dist int"
+        )
+        n0 = Counter(r[0] for r in seed_rows)
+        stats = {
+            i: (n0[i], len({(l, str(n)) for (l, n) in a.seeds} & stops.get(i, set())))
+            for i, a in enumerate(arms)
+        }
+    sym = sorted(i for i, a in enumerate(arms) if a.orientation == "sym")
+    levels = [_to_key(seeds)]
+    level_rows = [sum(n for n, _ in stats.values())]
+    remaining = {i: len(s) for i, s in stops.items()}
+    depths = [0] * len(arms)
+    live = set(range(len(arms)))
+    depth = 0
+    while True:
+        for i, (n, hit) in stats.items():
+            if n:
+                depths[i] = depth
+            if i in remaining:
+                remaining[i] -= hit
+        live = {
+            i
+            for i in live
+            if stats.get(i, (0, 0))[0]
+            and (arms[i].max_dist is None or depth < arms[i].max_dist)
+            and remaining.get(i) != 0
+        }
+        live = {i for i in live if arms[i].paired is None or arms[i].paired in live}
+        if not live:
+            break
+        frontier = levels[-1]
+        if any(n and i not in live for i, (n, _) in stats.items()):
+            frontier = frontier.filter(F.col("arm").isin(sorted(live)))
+        f = frontier.select(
+            "arm", *[F.col(k).alias(s) for k, s in zip(key, src)]
+        )
+        live_orients = sorted({arms[i].orientation for i in live})
+        on = src
+        if len(live_orients) == 1:
+            edges = edges_of[live_orients[0]]
+        else:
+            # one broadcast frontier against the union of the live
+            # orientations' cached views, each tagged so an arm only
+            # follows its own orientation
+            tag = None
+            for t, o in enumerate(live_orients):
+                arms_o = sorted(i for i in live if arms[i].orientation == o)
+                cond = F.col("arm").isin(arms_o)
+                tag = F.when(cond, t) if tag is None else tag.when(cond, t)
+            f = f.withColumn("_o", tag)
+            edges = _union(
+                [edges_of[o].withColumn("_o", F.lit(t)) for t, o in enumerate(live_orients)]
+            )
+            on = ["_o", *src]
+        if sum(stats[i][0] for i in live) <= BROADCAST_FRONTIER_MAX:
+            f = F.broadcast(f)
+        # Visited side of the anti-join. Undirected BFS invariant: an
+        # edge spans at most one level, so an expansion from level d
+        # can only re-touch levels d and d-1 -- a sym arm needs just
+        # its LAST TWO levels, which keeps the dedup side bounded by
+        # two level sizes at every depth. A directed edge can reach
+        # arbitrarily earlier levels: directed arms keep the union.
+        visited = [lv.select(*akey) for lv in levels[-2:]]
+        n_visited = sum(level_rows[-2:])
+        if len(sym) < len(arms) and len(levels) > 2:
+            older = [lv.select(*akey) for lv in levels[:-2]]
+            if sym:
+                older = [lv.filter(~F.col("arm").isin(sym)) for lv in older]
+            visited += older
+            n_visited += sum(level_rows[:-2])
+        visited = _union(visited)
+        if n_visited <= BROADCAST_FRONTIER_MAX:
+            visited = F.broadcast(visited)
+        # dedup on (arm, key) -- dist is constant within a level -- so
+        # the dedup exchange is hash-partitioned on exactly the
+        # anti-join key: one shuffle per level. (Measured r9:
+        # anti-joining BEFORE the dedup costs more -- the broadcast
+        # probe over the full expansion beats the bytes it saves.)
+        nxt = (
+            edges.join(f, on=on)
+            .select(
+                "arm",
+                *[F.col(d).alias(k) for d, k in zip(dst, key)],
+                F.lit(depth + 1).alias("dist"),
+            )
+            .dropDuplicates(akey)
+            .join(visited, on=akey, how="left_anti")
+        )
+        # lazy cut: the level's one action below materializes it;
+        # IterCheckpointer rebases to parquet every few levels so
+        # deep runs never chain enough localCheckpoints to hit the
+        # geometric replay blowup (ckpt.py)
+        nxt = ck.cut(nxt, eager=False)
+        depth += 1
+        stats = _measure(nxt, any(remaining.get(i) for i in live))
+        n_next = sum(n for n, _ in stats.values())
+        if n_next:
+            levels.append(nxt)
+            level_rows.append(n_next)
+    if views is None:
+        return _union(levels), depths
+    if len(levels) == 1:
+        return seeds, depths
+    deep = _union(levels[1:])
+    mapped = deep.join(nidx, deep["node"] == nidx["idx"]).select(
+        "arm", "layer", "node_id", "dist"
+    )
+    return seeds.unionByName(mapped), depths
 
 
 def bfs_distances(
     graph: OnionGraph,
-    sources: list[tuple[str, str]],
+    sources: "list[tuple[str, str]] | DataFrame",
     direction: str = "downstream",
     max_dist: int | None = None,
-    stop_nodes: list[tuple[str, str]] | None = None,
-    dynamic_cap=None,
-    found_depths: list[int] | None = None,
-    pace=None,
-    level_hook=None,
 ) -> DataFrame:
     """Min hop distance from the source set to every reachable node.
 
@@ -78,199 +292,18 @@ def bfs_distances(
     exactly the artificial-source construction the reference uses in
     compute_on_shortest (searcher.py:75-86).
 
-    Early termination (VERDICT r2 perf item): ``stop_nodes`` stops
-    the expansion once EVERY stop node has been reached — on-shortest
-    membership only needs distances up to max(target dists), so
-    expanding past the last target's level is wasted work
-    (O(ego-radius) rounds instead of O(diameter) on a deep graph).
-    If some stop node is unreachable the loop degrades gracefully to
-    the normal fixpoint. ``found_depths`` (optional caller-owned
-    list) receives the depth at which each stop node was first seen.
-    ``dynamic_cap`` is a zero-arg callable polled between levels
-    returning None (no cap yet) or an int depth cap — it lets a
-    concurrently-running sibling BFS publish its max-target depth
-    mid-flight, capping this run without serializing the two.
-
-    ``pace`` is a zero-arg callable polled before each expansion
-    returning None (unthrottled) or the deepest level this run may
-    currently build. on_shortest_path uses it to keep the reverse
-    arm from RACING past the forward arm: no target distance can
-    exceed the forward fixpoint depth, so reverse levels beyond the
-    forward arm's current depth can never contribute — without
-    pacing, the reverse fixpoint (often the whole-graph direction)
-    burns large frontier levels that the cap then discards, and
-    wall time becomes a thread-scheduling lottery. ``level_hook``
-    (called with the new depth after each level materializes) is the
-    publishing side of that handshake.
+    Int-keyed levels (core.cached_int_*) serve DEEP UNCAPPED
+    fixpoints from a driver-side seed list (the `reachable` shape):
+    only there do the many narrow levels amortize the one node-index
+    join that maps the result back to strings. Capped sweeps (k_hop)
+    and DataFrame seed sets (bow-tie) measured net slower on the int
+    key (r10 session-4 A/B: khop_upstream 1.21->1.57s, graph_bowtie
+    5.12->5.35s, vs reachability 4.88->3.17s, sssp_hops
+    2.35->1.85s) and keep the string key.
     """
-    import time as _time
-    spark = graph.nodes.sparkSession
-    # Int-keyed interior when the collision-checked 64-bit node
-    # keying holds (core.cached_int_*): every frontier, broadcast,
-    # dedup and anti-join exchange carries one 8-byte long instead of
-    # two strings — the same ~2.5x per-level cut measured on the
-    # pseudo-diameter and closeness sweeps. Gated to DEEP UNCAPPED
-    # fixpoints from a driver-side seed list (the `reachable` shape):
-    # only there do the many narrow levels amortize the one
-    # node-index join that maps the result back to strings. Shallow
-    # capped sweeps (k_hop), paced/stop-node arms (on_shortest_path)
-    # and big DataFrame seed sets (bow-tie) measured NET SLOWER on
-    # the int path (r10 session-4 A/B: khop_upstream 1.21->1.57s,
-    # on_shortest_path 3.39->4.79s, graph_bowtie 5.12->5.35s, vs
-    # reachability 4.88->3.17s, sssp_hops 2.35->1.85s) — they keep
-    # the exact string loop below.
-    if (
-        max_dist is None
-        and stop_nodes is None
-        and dynamic_cap is None
-        and pace is None
-        and level_hook is None
-        and not isinstance(sources, DataFrame)
-    ):
-        intp = (
-            graph.cached_int_sym()
-            if direction == "sym"
-            else graph.cached_int_endpoints(direction)
-        )
-        if intp is not None:
-            return _bfs_int(
-                graph, intp, sources, direction, max_dist, stop_nodes,
-                dynamic_cap, found_depths, pace, level_hook,
-            )
-    edges = _directed_endpoints(graph, direction)
-    # Each level's frontier is eagerly localCheckpoint-ed: ONE job
-    # per level materializes it with truncated lineage; the visited
-    # set for the anti-join is the union of the cached frontiers
-    # (all small), so there is no persist/unpersist churn and no
-    # exponentially growing plan. The edge side comes from the
-    # graph-level endpoint cache (persisted once per direction).
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    # deep BFS (diameter > ~12) would otherwise chain enough
-    # localCheckpoints to hit the geometric replay blowup (ckpt.py)
-    ck = IterCheckpointer(prefix="onionnet_bfs_")
-    frontier = _sources_df(spark, sources).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    level_counts = [n_frontier]  # parallel to `frontiers`
-    n_visited = n_frontier
-    depth = 0
-
-    remaining: set[tuple[str, str]] | None = None
-    stop_df = None
-    if stop_nodes is not None:
-        remaining = {(l, str(i)) for (l, i) in stop_nodes}
-        # built ONCE: levels are disjoint (anti-join vs visited), so
-        # a stop node can hit at most one level — no need to rebuild
-        # the probe frame as targets get discovered
-        stop_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(remaining), "layer string, node_id string"
-            )
-        )
-
-    def _mark_found(level_df: DataFrame, d: int) -> None:
-        # tiny job: broadcast the (small) target list against the
-        # already-checkpointed level frontier
-        if not remaining:
-            return
-        hits = level_df.join(stop_df, on=NODE_KEY, how="left_semi").select(*NODE_KEY)
-        for r in hits.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            if found_depths is not None:
-                found_depths.append(d)
-
-    if remaining is not None:
-        _mark_found(frontier, 0)
-
-    def _capped(d: int) -> bool:
-        if max_dist is not None and d >= max_dist:
-            return True
-        if remaining is not None and not remaining:
-            return True  # all stop nodes seen: current depth == max target dist
-        if dynamic_cap is not None:
-            c = dynamic_cap()
-            if c is not None and d >= c:
-                return True
-        return False
-
-    while n_frontier > 0 and not _capped(depth):
-        if pace is not None:
-            # hold until the pacing peer has itself reached the level
-            # we want to build (or stopped publishing = unthrottled);
-            # re-check the cap while waiting so a cap landing during
-            # the hold ends the run without one more expansion
-            while True:
-                allowed = pace()
-                if allowed is None or allowed > depth or _capped(depth):
-                    break
-                _time.sleep(0.02)
-            if _capped(depth):
-                break
-        f = frontier.select(
-            F.col("layer").alias("src_layer"), F.col("node_id").alias("src_id")
-        )
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if direction == "sym":
-            # Undirected BFS invariant: an edge spans at most one
-            # level, so an expansion from level d can only re-touch
-            # levels d and d-1 — the anti-join needs just the LAST TWO
-            # frontiers, not the whole visited set. This keeps the
-            # dedup side (and its broadcast) bounded by two level
-            # sizes at every depth, where the full-union form paid a
-            # growing O(visited) rebuild + driver broadcast per level
-            # (the graph_pseudo_diameter constant, VERDICT r8 item 3).
-            # Directed BFS keeps the full union: a directed edge can
-            # reach arbitrarily earlier levels.
-            recent = frontiers[-2:]
-            visited_keys = recent[0].select(*NODE_KEY)
-            for prev in recent[1:]:
-                visited_keys = visited_keys.unionByName(prev.select(*NODE_KEY))
-            if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-                visited_keys = F.broadcast(visited_keys)
-        else:
-            visited_keys = frontiers[0].select(*NODE_KEY)
-            for prev in frontiers[1:]:
-                visited_keys = visited_keys.unionByName(prev.select(*NODE_KEY))
-            if n_visited <= BROADCAST_FRONTIER_MAX:
-                # the visited side is exactly the frontier levels we
-                # already counted: while it fits the broadcast budget
-                # the anti-join is shuffle-free (and at toy scale the
-                # level loop drops from 2 exchanges to 1)
-                visited_keys = F.broadcast(visited_keys)
-        # dedup on NODE_KEY (dist is constant this level), so the
-        # dedup exchange is hash-partitioned on exactly the
-        # anti-join key and gets reused — one shuffle per level
-        # instead of two. (Measured r9: anti-joining BEFORE the dedup
-        # to shrink the shuffle costs MORE — the broadcast-hash probe
-        # over the full 4M-row expansion beats the bytes it saves.)
-        nxt = (
-            edges.join(f, on=["src_layer", "src_id"])
-            .select(
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-                F.lit(depth + 1).alias("dist"),
-            )
-            .dropDuplicates(NODE_KEY)
-            .join(visited_keys, on=NODE_KEY, how="left_anti")
-        )
-        nxt = ck.cut(nxt)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if level_hook is not None:
-            level_hook(depth)
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-            if remaining:
-                _mark_found(nxt, depth)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
+    int_key = max_dist is None and not isinstance(sources, DataFrame)
+    out, _ = _lockstep_bfs(graph, [_Arm(sources, direction, max_dist)], int_key)
+    return out.drop("arm")
 
 
 def k_hop(
@@ -284,7 +317,8 @@ def k_hop(
 
     Reference search (searcher.py:157-242). direction='bi' unions
     upstream and downstream reachable sets (searcher.py:222-223);
-    dist is then the min of the two directions.
+    dist is then the min of the two directions. The two arms run in
+    lockstep: one job set per level for both.
 
     ``include_upstream_children`` (bi mode only, reference
     searcher.py:212-216): additionally union the OUT-neighbors of
@@ -300,30 +334,33 @@ def k_hop(
             "include_upstream_children applies only to direction='bi' "
             "(reference searcher.py:212)"
         )
-    if direction == "bi":
-        down = bfs_distances(graph, [start], "downstream", max_dist)
-        up = bfs_distances(graph, [start], "upstream", max_dist)
-        parts = down.unionByName(up)
-        if include_upstream_children:
-            out_edges = _directed_endpoints(graph, "downstream")
-            children = (
-                out_edges.join(
-                    up.select(
-                        F.col("layer").alias("src_layer"),
-                        F.col("node_id").alias("src_id"),
-                        "dist",
-                    ),
-                    on=["src_layer", "src_id"],
-                )
-                .select(
-                    F.col("dst_layer").alias("layer"),
-                    F.col("dst_id").alias("node_id"),
-                    (F.col("dist") + F.lit(1)).alias("dist"),
-                )
+    if direction != "bi":
+        return bfs_distances(graph, [start], direction, max_dist)
+    out, _ = _lockstep_bfs(
+        graph,
+        [_Arm([start], "downstream", max_dist), _Arm([start], "upstream", max_dist)],
+    )
+    parts = out.drop("arm")
+    if include_upstream_children:
+        up = out.filter(F.col("arm") == 1)
+        children = (
+            graph.cached_endpoints("downstream")
+            .join(
+                up.select(
+                    F.col("layer").alias("src_layer"),
+                    F.col("node_id").alias("src_id"),
+                    "dist",
+                ),
+                on=["src_layer", "src_id"],
             )
-            parts = parts.unionByName(children)
-        return parts.groupBy(*NODE_KEY).agg(F.min("dist").alias("dist"))
-    return bfs_distances(graph, [start], direction, max_dist)
+            .select(
+                F.col("dst_layer").alias("layer"),
+                F.col("dst_id").alias("node_id"),
+                (F.col("dist") + F.lit(1)).alias("dist"),
+            )
+        )
+        parts = parts.unionByName(children)
+    return parts.groupBy(*NODE_KEY).agg(F.min("dist").alias("dist"))
 
 
 def reachable(
@@ -332,220 +369,6 @@ def reachable(
     """Full reachability fixpoint (reference _bfs_traversal,
     searcher.py:119-155)."""
     return bfs_distances(graph, [start], direction, max_dist=None)
-
-
-def _bfs_int(
-    graph: OnionGraph,
-    intp: tuple[DataFrame, DataFrame],
-    sources,
-    direction: str,
-    max_dist: int | None,
-    stop_nodes,
-    dynamic_cap,
-    found_depths,
-    pace,
-    level_hook,
-) -> "DataFrame | None":
-    """bfs_distances over the collision-checked int-keyed edge view:
-    identical loop structure, stop-node marking, pacing and capping —
-    but every level's join/dedup/anti-join keys on one 8-byte long.
-    Level 0 is emitted from the caller's string source frame (phantom
-    seeds survive exactly like the string path); levels >= 1 map back
-    through the node index once, at the end, via the same inner join
-    the other int interiors use (_multi_source_bfs_int,
-    _sym_bfs_int) — which assumes the OnionGraph invariant that edge
-    endpoints appear in graph.nodes, exactly as they do.
-    """
-    import time as _time
-
-    e_int, nidx = intp
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    ck = IterCheckpointer(prefix="onionnet_bfs_int_")
-    srcs = _sources_df(spark, sources)
-    frontier = srcs.select(
-        F.xxhash64("layer", "node_id").alias("node"), F.col("dist")
-    ).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    level_counts = [n_frontier]
-    n_visited = n_frontier
-    depth = 0
-    found_local: list[int] = []
-
-    remaining: set[tuple[str, str]] | None = None
-    stop_int = None
-    if stop_nodes is not None:
-        remaining = {(l, str(i)) for (l, i) in stop_nodes}
-        stop_strings = spark.createDataFrame(
-            sorted(remaining), "layer string, node_id string"
-        )
-        # probe built once, carrying the stop node's STRING identity
-        # alongside its hash so hits report (layer, node_id) without
-        # a node-index join; levels are disjoint so each stop node
-        # hits at most one level
-        stop_int = F.broadcast(
-            stop_strings.select(
-                "layer", "node_id",
-                F.xxhash64("layer", "node_id").alias("node"),
-            )
-        )
-        # depth-0 hits come off the string source frame directly
-        hits0 = srcs.join(
-            F.broadcast(stop_strings), on=NODE_KEY, how="left_semi"
-        ).select(*NODE_KEY)
-        for r in hits0.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            found_local.append(0)
-
-    def _mark_found(level_df: DataFrame, d: int) -> None:
-        if not remaining:
-            return
-        hits = level_df.join(stop_int, on="node").select("layer", "node_id")
-        for r in hits.collect():
-            remaining.discard((r["layer"], r["node_id"]))
-            found_local.append(d)
-
-    def _capped(d: int) -> bool:
-        if max_dist is not None and d >= max_dist:
-            return True
-        if remaining is not None and not remaining:
-            return True
-        if dynamic_cap is not None:
-            c = dynamic_cap()
-            if c is not None and d >= c:
-                return True
-        return False
-
-    while n_frontier > 0 and not _capped(depth):
-        if pace is not None:
-            while True:
-                allowed = pace()
-                if allowed is None or allowed > depth or _capped(depth):
-                    break
-                _time.sleep(0.02)
-            if _capped(depth):
-                break
-        f = frontier.select(F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if direction == "sym":
-            # undirected invariant: dedup against the last TWO
-            # frontiers only (see the string loop for the proof)
-            recent = frontiers[-2:]
-            visited = recent[0].select("node")
-            for prev in recent[1:]:
-                visited = visited.unionByName(prev.select("node"))
-            if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-                visited = F.broadcast(visited)
-        else:
-            visited = frontiers[0].select("node")
-            for prev in frontiers[1:]:
-                visited = visited.unionByName(prev.select("node"))
-            if n_visited <= BROADCAST_FRONTIER_MAX:
-                visited = F.broadcast(visited)
-        nxt = (
-            e_int.join(f, on="s")
-            .select(F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(["node"])
-            .join(visited, on="node", how="left_anti")
-        )
-        # lazy cut + count = one job per level (see _sym_bfs_int)
-        nxt = ck.cut(nxt, eager=False)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if level_hook is not None:
-            level_hook(depth)
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-            if remaining:
-                _mark_found(nxt, depth)
-        frontier = nxt
-
-    deep = None
-    for prev in frontiers[1:]:
-        deep = prev if deep is None else deep.unionByName(prev)
-    if deep is None:
-        out = srcs
-    else:
-        mapped = deep.join(nidx, deep["node"] == nidx["idx"]).select(
-            "layer", "node_id", "dist"
-        )
-        out = srcs.unionByName(mapped)
-    if found_depths is not None:
-        found_depths.extend(found_local)
-    return out
-
-
-def _sym_bfs_int(
-    graph: OnionGraph, seed: tuple[str, str]
-) -> "DataFrame | None":
-    """Full undirected BFS fixpoint over the int-keyed symmetrized
-    view (core.cached_int_sym): DataFrame(node: long, dist: int), or
-    None when the 64-bit keying collided and the caller must use the
-    exact string-keyed `bfs_distances`.
-
-    Same loop shape as `bfs_distances(direction='sym')` — broadcast
-    frontier under the budget, per-level dedup fused with the
-    anti-join key, dedup against the last TWO frontiers only (an
-    undirected edge spans at most one level) — but every frontier,
-    broadcast, and exchange carries one 8-byte long instead of two
-    strings, which is where a whole-graph sweep's level cost lives.
-    """
-    pair = graph.cached_int_sym()
-    if pair is None:
-        return None
-    sym, _ = pair
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
-    ck = IterCheckpointer(prefix="onionnet_bfs_int_")
-    frontier = (
-        spark.createDataFrame([(seed[0], str(seed[1]))], "layer string, node_id string")
-        .select(
-            F.xxhash64("layer", "node_id").alias("node"),
-            F.lit(0).alias("dist"),
-        )
-        .localCheckpoint()
-    )
-    frontiers = [frontier]
-    level_counts = [frontier.count()]
-    n_frontier = level_counts[0]
-    depth = 0
-    while n_frontier > 0:
-        f = frontier.select(F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        recent = frontiers[-2:]
-        visited = recent[0].select("node")
-        for prev in recent[1:]:
-            visited = visited.unionByName(prev.select("node"))
-        if sum(level_counts[-2:]) <= BROADCAST_FRONTIER_MAX:
-            visited = F.broadcast(visited)
-        nxt = (
-            sym.join(f, on="s")
-            .select(F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(["node"])
-            .join(visited, on="node", how="left_anti")
-        )
-        # lazy cut: the count below materializes the checkpoint, so
-        # each level is ONE job instead of two (r11 — the sweep is
-        # level-count x per-job overhead bound, measured 2.3s/level
-        # on 10-row late frontiers vs a 0.5s broadcast-probe floor)
-        nxt = ck.cut(nxt, eager=False)
-        depth += 1
-        n_frontier = nxt.count()
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
 
 
 def pseudo_diameter(
@@ -563,49 +386,26 @@ def pseudo_diameter(
 
     Returns one row: (start_layer, start_id, peak_layer, peak_id,
     pseudo_diameter) where peak is the farthest node found by the
-    final sweep. Each sweep is the shared frontier-broadcast BFS
-    (one shuffle per level, localCheckpoint-flattened plans); the
-    per-sweep argmax is a TakeOrdered limit(1) — a scalar fetch, not
-    a data collect.
+    final sweep. Each sweep is one int-keyed sym arm of the frontier
+    kernel; its eccentricity is the arm's depth, so the argmax maps
+    back only the nodes at that depth and takes the smallest (layer,
+    node_id) with a TakeOrdered limit(1) — a scalar fetch, not a
+    data collect.
     """
     if n_sweeps < 1:
         raise ValueError(f"n_sweeps must be >= 1, got {n_sweeps}")
     src = (start[0], str(start[1]))
     far = None
     ecc = 0
-    # Int-keyed sweeps when the 64-bit node keying is collision-free
-    # (cached_int_sym checks; ~2.5x per-level win at sf0.1 — every
-    # frontier broadcast and dedup exchange carries an 8-byte long
-    # instead of two strings); the per-sweep argmax maps back through
-    # the node-index table BEFORE the (dist desc, layer, node_id)
-    # tie-break, so the chosen peak — and therefore the result — is
-    # identical to the string-keyed path, which remains the fallback.
-    int_ready = graph.cached_int_sym() is not None
     for _ in range(n_sweeps):
-        if int_ready:
-            d_int = _sym_bfs_int(graph, src)
-            _, nidx = graph.cached_int_sym()
-            # argmax without the full node-index join (r11): take the
-            # scalar max dist first, map back ONLY the nodes at that
-            # eccentricity (a handful on any real graph), then apply
-            # the same (dist desc, layer, node_id) tie-break — among
-            # max-dist rows that is exactly the old global argmax.
-            mx = d_int.agg(F.max("dist").alias("m")).collect()[0]["m"]
-            far_int = d_int.filter(F.col("dist") == mx)
-            d = far_int.join(nidx, far_int["node"] == nidx["idx"]).select(
-                "layer", "node_id", "dist"
-            )
-        else:
-            d = bfs_distances(graph, [src], direction="sym")
-        rows = d.orderBy(F.desc("dist"), "layer", "node_id").limit(1).collect()
-        if not rows:
-            # phantom seed on the int path (a seed absent from the
-            # node table has no index row): eccentricity 0 at itself,
-            # matching the string path's seed-only frame
-            far, ecc = src, 0
-            break
-        row = rows[0]
-        far, ecc = (row["layer"], row["node_id"]), int(row["dist"])
+        d, (ecc,) = _lockstep_bfs(graph, [_Arm([src], "sym")], int_key=True)
+        row = (
+            d.filter(F.col("dist") == ecc)
+            .orderBy("layer", "node_id")
+            .limit(1)
+            .collect()[0]
+        )
+        far = (row["layer"], row["node_id"])
         src = far
     spark = graph.nodes.sparkSession
     return spark.createDataFrame(
@@ -746,67 +546,32 @@ def on_shortest_path(
     semantics exactly, including the quirk that d_r is the min over
     ALL targets while membership is tested against the full set of
     target distances.
+
+    Neither BFS needs its full fixpoint: membership requires
+    d_f(v) + d_r(v) == some target distance td <= D, where D is the
+    depth of the last target found, so d_f(v) <= D and d_r(v) <= D
+    for every member. The forward arm stops once every target is
+    found (at depth D; an unreachable target lets it run to its
+    fixpoint), and the reverse arm runs in lockstep with it and
+    stops with it -- one job set per level for both directions
+    instead of O(diameter) reverse rounds.
     """
-    # The forward and reverse fixpoints are independent pipelines, so
-    # they are submitted from two threads and Spark interleaves their
-    # jobs across the executor pool — roughly halving wall time (each
-    # BFS level is a small job that underutilizes the cluster alone).
-    #
-    # Neither BFS needs its full fixpoint: membership requires
-    # d_f(v) + d_r(v) == some target distance td <= D where
-    # D = max(target dists), so d_f(v) <= D and d_r(v) <= D for every
-    # member. The forward run stops itself once all targets are seen
-    # (its stopping depth IS D); it publishes D through `cap_state`,
-    # and the reverse run polls it between levels so it also stops at
-    # D instead of the full reachable fixpoint (VERDICT r2: the
-    # difference between O(diameter) and O(ego-radius) rounds).
-    from concurrent.futures import ThreadPoolExecutor
-
-    cap_state: dict[str, int | None] = {"cap": None}
-    # forward publishes its per-level progress; the reverse arm is
-    # PACED to it (never builds level d before forward has) — no
-    # target distance can exceed the forward fixpoint depth, so a
-    # reverse level deeper than forward's current depth can never
-    # contribute and racing ahead only burns the big-direction
-    # frontiers the cap then discards (the r05 on_shortest_path
-    # regression was exactly this thread-scheduling lottery)
-    progress: dict[str, int | bool] = {"depth": 0, "done": False}
-    found_depths: list[int] = []
-
-    def _run_forward() -> DataFrame:
-        try:
-            out = bfs_distances(
-                graph,
-                [source],
-                "downstream",
-                stop_nodes=targets,
-                found_depths=found_depths,
-                level_hook=lambda d: progress.__setitem__("depth", d),
-            )
-            # max depth among FOUND targets; unreachable targets
-            # never contribute to td so they don't raise the cap
-            cap_state["cap"] = max(found_depths) if found_depths else 0
-            return out
-        finally:
-            progress["done"] = True
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fwd = pool.submit(_run_forward)
-        f_rev = pool.submit(
-            bfs_distances,
-            graph,
-            targets,
-            "upstream",
-            dynamic_cap=lambda: cap_state["cap"],
-            pace=lambda: None if progress["done"] else progress["depth"],
-        )
-        fwd = f_fwd.result().withColumnRenamed("dist", "d_f")
-        rev = f_rev.result().withColumnRenamed("dist", "d_r")
+    out, _ = _lockstep_bfs(
+        graph,
+        [
+            _Arm([source], "downstream", stop_nodes=targets),
+            _Arm(targets, "upstream", paired=0),
+        ],
+    )
+    fwd = out.filter(F.col("arm") == 0).select(*NODE_KEY, F.col("dist").alias("d_f"))
+    rev = out.filter(F.col("arm") == 1).select(*NODE_KEY, F.col("dist").alias("d_r"))
     target_dists = (
         fwd.join(
             F.broadcast(
-                fwd.sparkSession.createDataFrame(
-                    [(l, str(i)) for (l, i) in targets], "layer string, node_id string"
+                _rows_frame(
+                    fwd.sparkSession,
+                    [(l, str(i)) for (l, i) in targets],
+                    "layer string, node_id string",
                 )
             ),
             on=NODE_KEY,
@@ -875,11 +640,14 @@ def multi_source_bfs(
     max_dist: int | None = None,
 ) -> DataFrame:
     """Per-source BFS distances for ALL sources in ONE
-    level-synchronous sweep: the frontier is keyed by (sid, node),
-    so each level is still a single join + dedup + anti-join round
-    and the per-level job count is independent of the source count
+    level-synchronous sweep: one kernel arm per distinct source, so
+    each level is still a single join + dedup + anti-join round and
+    the per-level job count is independent of the source count
     (running k separate bfs_distances calls would cost k times the
-    scheduling). sid is the source's 'layer:node_id' key.
+    scheduling). sid is the source's 'layer:node_id' key. Directed
+    sweeps run on the int key: the visited union reaches
+    k x |reach| rows, which is where a k-pivot sweep's level cost
+    lives.
 
     Unlike bfs_distances (which MERGES sources into a min-distance
     field), this keeps the per-source distance — the primitive for
@@ -888,126 +656,18 @@ def multi_source_bfs(
 
     Returns DataFrame(sid, layer, node_id, dist).
     """
-    spark = graph.nodes.sparkSession
-    if direction in ("downstream", "upstream"):
-        intp = graph.cached_int_endpoints(direction)
-        if intp is not None:
-            return _multi_source_bfs_int(graph, intp, sources, max_dist)
-    edges = _directed_endpoints(graph, direction)
-    keys = ["sid", *NODE_KEY]
-    frontier = spark.createDataFrame(
-        [(f"{l}:{i}", l, str(i), 0) for (l, i) in sources],
-        "sid string, layer string, node_id string, dist int",
-    ).localCheckpoint()
-    frontiers = [frontier]
-    n_frontier = frontier.count()
-    depth = 0
-    while n_frontier > 0 and (max_dist is None or depth < max_dist):
-        f = frontier.select(
-            "sid",
-            F.col("layer").alias("src_layer"),
-            F.col("node_id").alias("src_id"),
-        )
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        visited = frontiers[0].select(*keys)
-        for prev in frontiers[1:]:
-            visited = visited.unionByName(prev.select(*keys))
-        nxt = (
-            edges.join(f, on=["src_layer", "src_id"])
-            .select(
-                "sid",
-                F.col("dst_layer").alias("layer"),
-                F.col("dst_id").alias("node_id"),
-                F.lit(depth + 1).alias("dist"),
-            )
-            .dropDuplicates(keys)
-            .join(visited, on=keys, how="left_anti")
-            .localCheckpoint()
-        )
-        depth += 1
-        n_frontier = nxt.count()
-        if n_frontier:
-            frontiers.append(nxt)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    return out
-
-
-def _multi_source_bfs_int(
-    graph: OnionGraph,
-    intp: tuple[DataFrame, DataFrame],
-    sources,
-    max_dist: int | None,
-) -> DataFrame:
-    """multi_source_bfs over the collision-checked int-keyed
-    endpoint view: the frontier and the growing visited union carry
-    (sid: int, node: long) instead of three strings, which is where
-    a k-pivot whole-graph sweep's level cost lives (the visited union
-    reaches k x |reach| rows). Output schema and values are
-    identical to the string path — sid strings and (layer, node_id)
-    are re-attached once, at the end. Duplicate sources collapse to
-    one sid exactly like the string path's identical-sid dedup.
-    """
-    e_int, nidx = intp
-    spark = graph.nodes.sparkSession
-    from onionnet_spark.operators.ckpt import IterCheckpointer
-
     uniq = list(dict.fromkeys((l, str(i)) for (l, i) in sources))
-    src_map = spark.createDataFrame(
-        [(si, l, i) for si, (l, i) in enumerate(uniq)],
-        "sid_i int, s_layer string, s_id string",
+    out, _ = _lockstep_bfs(
+        graph,
+        [_Arm([s], direction, max_dist) for s in uniq],
+        int_key=direction in ("downstream", "upstream"),
     )
-    ck = IterCheckpointer(prefix="onionnet_msbfs_int_")
-    frontier = src_map.select(
-        "sid_i",
-        F.xxhash64("s_layer", "s_id").alias("node"),
-        F.lit(0).alias("dist"),
-    ).localCheckpoint()
-    keys = ["sid_i", "node"]
-    frontiers = [frontier]
-    level_counts = [frontier.count()]
-    n_frontier = level_counts[0]
-    n_visited = n_frontier
-    depth = 0
-    while n_frontier > 0 and (max_dist is None or depth < max_dist):
-        f = frontier.select("sid_i", F.col("node").alias("s"))
-        if n_frontier <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        visited = frontiers[0].select(*keys)
-        for prev in frontiers[1:]:
-            visited = visited.unionByName(prev.select(*keys))
-        if n_visited <= BROADCAST_FRONTIER_MAX:
-            visited = F.broadcast(visited)
-        nxt = (
-            e_int.join(f, on="s")
-            .select("sid_i", F.col("d").alias("node"), F.lit(depth + 1).alias("dist"))
-            .dropDuplicates(keys)
-            .join(visited, on=keys, how="left_anti")
-        )
-        nxt = ck.cut(nxt)
-        depth += 1
-        n_frontier = nxt.count()
-        n_visited += n_frontier
-        if n_frontier:
-            frontiers.append(nxt)
-            level_counts.append(n_frontier)
-        frontier = nxt
-    out = frontiers[0]
-    for prev in frontiers[1:]:
-        out = out.unionByName(prev)
-    sid_map = F.broadcast(
-        src_map.select(
-            "sid_i", F.concat_ws(":", "s_layer", "s_id").alias("sid")
-        )
+    sid = _rows_frame(
+        graph.nodes.sparkSession,
+        [(a, f"{l}:{i}") for a, (l, i) in enumerate(uniq)],
+        "arm int, sid string",
     )
-    return (
-        out.join(nidx, out["node"] == nidx["idx"])
-        .join(sid_map, on="sid_i")
-        .select("sid", "layer", "node_id", "dist")
-    )
+    return out.join(F.broadcast(sid), on="arm").select("sid", "layer", "node_id", "dist")
 
 
 def temporal_earliest_arrival(

@@ -1,9 +1,9 @@
-"""Registry invariants: duplicate-key guard and driver-window rotation.
+"""Registry invariants: duplicate-key guard, registration order and
+driver correctness evidence.
 
-The driver records correctness for only the first 50 registered
-queries per round, so load_all()'s ordering IS the evidence plan;
-and round 2 shipped a silently-overwritten duplicate registration
-(graph_pagerank_weighted), which the guard now makes impossible.
+Round 2 shipped a silently-overwritten duplicate registration
+(graph_pagerank_weighted), which the guard now makes impossible;
+every registered key must have a green driver correctness record.
 """
 
 import json
@@ -34,30 +34,17 @@ def test_oracle_attachment_to_same_fn_allowed():
 def test_load_all_is_registry_superset_and_ordered():
     reg = q.load_all()
     assert set(reg) == set(q.REGISTRY)
-    # round-11 priority: the 17 _R10_NEW keys (the only registry keys
-    # with no driver-recorded green row) lead, then 33 of the stalest
-    # r02-only keys, then the recorded rotation history
-    present_priority = []
-    for k in (
-        q._R11_WINDOW + q._R10_WINDOW + q._R10_NEW + q._R9_WINDOW
-        + q._R9_NEW + q._R8_WINDOW + q._R7_WINDOW + q._R6_WINDOW
-    ):
-        if k in reg and k not in present_priority:
-            present_priority.append(k)
-    assert list(reg)[: len(present_priority)] == present_priority
+    assert list(reg) == list(q.REGISTRY)  # registration order
 
 
-def test_r10_window_resweeps_stalest_evidence():
-    """Evidence-plan invariants (VERDICT r9 next-round item 1): the
-    first sweep cycle is complete — the union of driver records
-    r01-r09 must cover the WHOLE registry green — so the round-10
-    window starts the bit-rot re-sweep: its 50 slots are exactly the
-    keys whose only green row is r01 (8 rounds of refactors old),
-    plus the 2 oldest r02-only keys, in registration order first."""
+def test_every_key_has_green_driver_evidence():
+    """Evidence invariants: every key with a red driver record also
+    has a green one, and the union of driver records r01-r11 covers
+    the WHOLE registry green."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     green_rounds: dict[str, set[int]] = {}
     red = set()
-    for rnd in (1, 2, 3, 5, 6, 7, 8, 9, 10):
+    for rnd in (1, 2, 3, 5, 6, 7, 8, 9, 10, 11):
         path = os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json")
         if not os.path.exists(path):
             continue
@@ -80,22 +67,8 @@ def test_r10_window_resweeps_stalest_evidence():
     red -= set(green_rounds)
     red &= set(q.REGISTRY)  # drop keys retired from the registry
     assert not red, f"keys with a red driver record left unfixed: {red}"
-    reg = q.load_all()
-    # zero evidence debt: every key ever registered has a green row
-    # (keys added THIS round are allowed to be pending, queued in
-    # _R10_NEW behind the sweep)
-    unrecorded = [
-        k for k in reg if k not in green_rounds and k not in q._R10_NEW
-    ]
+    unrecorded = [k for k in q.load_all() if k not in green_rounds]
     assert not unrecorded, f"keys with no driver record: {unrecorded}"
-    # the r11 window closes the last coverage gap first (the 17
-    # _R10_NEW keys are the only ones with no driver green row), then
-    # re-records the stalest remaining evidence (r02-only keys)
-    r02_only = {k for k, rs in green_rounds.items() if rs == {2}}
-    window = q._R11_WINDOW
-    assert list(reg)[: len(window)] == window
-    assert window[:17] == q._R10_NEW
-    assert set(window[17:]) <= r02_only and len(window) == 50
 
 
 def test_survey_inventory_matches_registry():

@@ -5,12 +5,16 @@ from pyspark.sql import functions as F
 
 from onionnet_spark.builder import grow_onion
 from onionnet_spark.operators.traversal import (
+    _Arm,
+    _lockstep_bfs,
     bfs_distances,
     k_hop,
+    multi_source_bfs,
     on_shortest_path,
+    pseudo_diameter,
     reachable,
 )
-from onionnet_spark.sources.tpch_graph import graph_ctes
+from onionnet_spark.sources.tpch_graph import build_graph, graph_ctes
 
 from tests.conftest import duck_to_set, rows_to_set
 
@@ -78,27 +82,91 @@ def test_on_shortest_tiny(tiny_graph):
     assert {(r[2], r[3]) for r in got} == {("L", "a"), ("L", "c"), ("L", "d")}
 
 
-def test_bfs_stop_nodes_truncates_at_last_target(spark):
-    # deep path p0 -> p1 -> ... -> p9; stopping at {p3} must halt the
-    # expansion at depth 3 (the early-termination contract on_shortest
-    # relies on), not run to the depth-9 fixpoint
+@pytest.fixture(scope="module")
+def path_graph(spark):
+    # p0 -> p1 -> ... -> p9, plus an isolated node q
     nodes = spark.createDataFrame(
-        [("L", f"p{i}") for i in range(10)], "layer string, node_id string"
+        [("L", f"p{i}") for i in range(10)] + [("L", "q")],
+        "layer string, node_id string",
     )
     edges = spark.createDataFrame(
         [("L", f"p{i}", "L", f"p{i+1}") for i in range(9)],
         "src_layer string, src_id string, dst_layer string, dst_id string",
     )
-    g = grow_onion(nodes, edges)
-    depths: list[int] = []
-    got = rows_to_set(
-        bfs_distances(
-            g, [("L", "p0")], "downstream",
-            stop_nodes=[("L", "p3")], found_depths=depths,
-        )
+    return grow_onion(nodes, edges)
+
+
+def test_bfs_stop_nodes_truncates_at_last_target(path_graph):
+    # stopping at {p3} must halt the kernel's expansion at depth 3
+    # (the early-termination contract on_shortest relies on), not run
+    # to the depth-9 fixpoint
+    out, depths = _lockstep_bfs(
+        path_graph, [_Arm([("L", "p0")], "downstream", stop_nodes=[("L", "p3")])]
     )
-    assert got == {(i, "L", f"p{i}") for i in range(4)}
+    assert rows_to_set(out) == {(0, i, "L", f"p{i}") for i in range(4)}
     assert depths == [3]
+
+
+def test_khop_bi_upstream_arm_empty_after_seed(tiny_graph):
+    # a has no in-edges: the upstream arm dies after level 0 while the
+    # downstream arm runs on to its depth-2 fixpoint
+    want = {(0, "L", "a"), (1, "L", "b"), (1, "L", "c"), (2, "L", "d")}
+    assert rows_to_set(k_hop(tiny_graph, ("L", "a"), 3, "bi")) == want
+    widened = k_hop(tiny_graph, ("L", "a"), 3, "bi", include_upstream_children=True)
+    assert rows_to_set(widened) == want
+
+
+def test_khop_bi_arms_reach_different_depths(path_graph):
+    # from p2 the upstream arm stops at depth 2 (p0), the downstream
+    # arm at depth 7 (p9), both below max_dist
+    got = rows_to_set(k_hop(path_graph, ("L", "p2"), 9, "bi"))
+    want = {(0, "L", "p2"), (1, "L", "p1"), (2, "L", "p0")}
+    want |= {(i - 2, "L", f"p{i}") for i in range(3, 10)}
+    assert got == want
+
+
+def test_on_shortest_unreachable_target(path_graph):
+    # q is never found, so the forward arm runs to its fixpoint and the
+    # reverse arm keeps expanding (p1, p0) after the forward arm's only
+    # hit at depth 1; membership is unchanged: d_f + d_r == 1
+    got = rows_to_set(on_shortest_path(path_graph, ("L", "p2"), [("L", "p3"), ("L", "q")]))
+    assert got == {(0, 1, "L", "p2"), (1, 0, "L", "p3")}
+
+
+def test_on_shortest_source_among_targets(tiny_graph):
+    # target dists {0, 2}: a (0+0), c (1+1), d (2+0); b has 1+2
+    got = rows_to_set(on_shortest_path(tiny_graph, ("L", "a"), [("L", "a"), ("L", "d")]))
+    assert got == {(0, 0, "L", "a"), (1, 1, "L", "c"), (2, 0, "L", "d")}
+    only = rows_to_set(on_shortest_path(tiny_graph, ("L", "a"), [("L", "a")]))
+    assert only == {(0, 0, "L", "a")}
+
+
+def test_on_shortest_duplicate_targets(tiny_graph):
+    got = rows_to_set(on_shortest_path(tiny_graph, ("L", "a"), [("L", "d"), ("L", "d")]))
+    assert got == {(0, 2, "L", "a"), (1, 1, "L", "c"), (2, 0, "L", "d")}
+
+
+def test_hash_collision_fallback_matches_int_key(spark, sf_dir, tpch_graph, monkeypatch):
+    """With the 64-bit node index reported as clashing, every int-keyed
+    caller runs on the string key and returns the same rows."""
+    g = build_graph(spark, sf_dir).persist()
+    monkeypatch.setattr(g, "_int_nodes", lambda: None)
+    assert g.cached_int_endpoints("upstream") is None
+    assert g.cached_int_sym() is None
+    assert tpch_graph.cached_int_sym() is not None
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    pivots = [("region", "0"), ("nation", "5")]
+    for call in (
+        lambda h: reachable(h, ("region", "0"), "upstream"),
+        lambda h: reachable(h, ("region", "no-such-node"), "upstream"),
+        lambda h: multi_source_bfs(h, pivots, "upstream", max_dist=3),
+        lambda h: pseudo_diameter(h, ("region", "0")),
+    ):
+        assert rows(call(g)) == rows(call(tpch_graph))
+    g.unpersist()
 
 
 def test_on_shortest_deep_tail_unaffected_by_early_stop(spark):
